@@ -1,8 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The results database: an append-only, Parquet-backed, `_run_id`-
   * partitioned table replacing the reference's single rewritten pickle
@@ -14,10 +16,11 @@ import org.apache.spark.sql.types._
   *     touched except on pset-schema growth, where the hash column must be
   *     recomputed (ref psweep.py:690-710) — a single distributed rewrite;
   *   - counters come from a column-pruned `agg(max)` scan (Parquet footer
-  *     stats, no data read);
-  *   - dedup against the database broadcasts the (small) incoming hash set
-  *     and semi-joins the database's hash column — one column-pruned pass,
-  *     no driver-side materialization of database hashes.
+  *     stats, no data read), or from the skip manifest when one is kept;
+  *   - dedup against the database is one column-pruned filter scan
+  *     testing membership in the incoming hash set — the set is
+  *     driver-built params, so no join and no broadcast, and no
+  *     driver-side materialization of database hashes.
   */
 class Database(val spark: SparkSession, val calcDir: String,
                val basename: String = "database") {
@@ -144,50 +147,47 @@ class Database(val spark: SparkSession, val calcDir: String,
     * SURVEY §4.3(c)'s "counters from a lightweight metadata read",
     * zero data files touched (DatabaseSpec pins it); full column-pruned
     * scan otherwise. */
-  def counters(): (Long, Long) = {
-    recover()
-    if (manifestFresh) {
-      val m = spark.read.parquet(manifestDir)
-      if (Seq("pset_seq_max", "run_seq_max").forall(m.columns.contains)) {
-        val r = m.agg(max(col("pset_seq_max")).cast(LongType),
-          max(col("run_seq_max")).cast(LongType)).head()
-        return (if (r.isNullAt(0)) -1L else r.getLong(0),
-          if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
+  def counters(): (Long, Long) = counters(readOpt())
+
+  /** [[counters]] with `frame` (the caller's already-read database)
+    * as the scan fallback. */
+  private[core] def counters(frame: => Option[DataFrame]): (Long, Long) =
+    manifest() match {
+      case Some(m) => (m.flatMap(_.pset_seq_max).maxOption.getOrElse(-1L),
+        m.flatMap(_.run_seq_max).maxOption.getOrElse(-1L))
+      case None => frame.fold((-1L, -1L))(Database.seqMaxima)
     }
-    readOpt() match {
-      case None => (-1L, -1L)
-      case Some(df) =>
-        val r = df.agg(
-          max(col("_pset_seq")).cast(LongType),
-          max(col("_run_seq")).cast(LongType)).head()
-        (if (r.isNullAt(0)) -1L else r.getLong(0),
-         if (r.isNullAt(1)) -1L else r.getLong(1))
-    }
-  }
 
   /** Which of `values` already exist in database column `colName`?
-    * One column-pruned scan; the small side is broadcast
-    * (the J1 dedup anti-join and the `_pset_id` collision re-check,
-    * ref psweep.py:1068-1081,1442-1446). For the two manifest-ranged
-    * columns (`_pset_id`, `_pset_hash`) a fresh manifest prunes the
-    * scan to files whose hash range covers some probe — the per-run
-    * skip_dups pre-check reads touched files, not the corpus. */
-  def existingAmong(colName: String, values: Seq[String]): Set[String] = {
-    recover()
-    if (values.isEmpty || !exists) return Set.empty
-    val pruned = colName match {
-      case "_pset_id" => prunedFiles("pid_hmin", "pid_hmax", values)
-      case "_pset_hash" => prunedFiles("psh_hmin", "psh_hmax", values)
-      case _ => None
-    }
-    pruned match {
-      case Some(files) if files.isEmpty => Set.empty
-      case Some(files) =>
-        Database.existingAmong(readFiles(files), colName, values)
-      case None =>
-        readOpt().map(Database.existingAmong(_, colName, values))
-          .getOrElse(Set.empty)
+    * One column-pruned filter scan (the J1 dedup anti-join and the
+    * `_pset_id` collision re-check, ref psweep.py:1068-1081,1442-1446).
+    * For the two manifest-ranged columns (`_pset_id`, `_pset_hash`) a
+    * fresh manifest prunes the scan to files whose hash range covers
+    * some probe — the per-run skip_dups pre-check reads touched files,
+    * not the corpus. */
+  def existingAmong(colName: String, values: Seq[String]): Set[String] =
+    if (values.isEmpty) Set.empty
+    else existingAmong(Map(colName -> values), readOpt())(colName)
+
+  /** Several [[existingAmong]] probes answered by ONE filter scan: over
+    * the files an attested manifest keeps for any probe when every
+    * probed column is hash-ranged, else over `frame` (the caller's
+    * already-read database). */
+  private[core] def existingAmong(probes: Map[String, Seq[String]],
+                                  frame: => Option[DataFrame])
+      : Map[String, Set[String]] =
+  {
+    val none = probes.map { case (c, _) => c -> Set.empty[String] }
+    manifest().filter(_ => probes.keys.forall(hashRange.contains)) match {
+      case Some(m) =>
+        val hs = probes.toSeq.map { case (c, vs) =>
+          hashRange(c) -> Database.sortedHashes(vs) }
+        val files = m.filter(s => hs.exists { case (range, h) =>
+          Database.covers(h, range(s)) }).map(_.file)
+        if (files.isEmpty) none
+        else Database.existingAmong(readFiles(files, Some(StructType(
+          probes.keys.toSeq.map(StructField(_, StringType))))), probes)
+      case None => frame.fold(none)(Database.existingAmong(_, probes))
     }
   }
 
@@ -196,14 +196,31 @@ class Database(val spark: SparkSession, val calcDir: String,
     * [[rebuildSkipManifest]]), the new files' stats are appended
     * incrementally — one scan of the NEW files only, never the db. */
   def append(df: DataFrame): Unit = withWriteLock {
-    // the commit marker must not attest manifest completeness while the
-    // new partition's files exist without manifest rows — drop it
-    // BEFORE the data lands; updateSkipManifest re-writes it after the
-    // fresh stats commit (a crash in between degrades lookups to the
-    // listing fallback, never to wrong answers)
-    if (Fs.exists(manifestDir)) Fs.delete(commitMarker)
+    // the manifest this append extends, taken while the marker still
+    // attests it. The marker must not attest completeness while the new
+    // partition's files exist without manifest rows — drop it BEFORE the
+    // data lands and re-write it after the fresh stats commit (a crash
+    // in between degrades reads to plain scans, never to wrong answers)
+    val kept = Fs.exists(manifestDir)
+    val prior = manifest()
+    if (kept) Fs.delete(commitMarker)
     df.write.mode("append").partitionBy("_run_id").parquet(dbPath)
-    updateSkipManifestUnlocked()
+    if (kept) prior match {
+      // nothing attested to extend (a crash window, or a pre-marker
+      // manifest that may lack columns): rebuild
+      case None => rebuildSkipManifestUnlocked()
+      case Some(m) =>
+        // stat only the files `m` lacks, read with the appended frame's
+        // schema — no inference
+        val fresh = spark.read.schema(df.schema).parquet(dbPath).inputFiles
+          .map(normalizePath).filterNot(m.map(_.file).toSet)
+        val stats =
+          if (fresh.isEmpty) Seq.empty
+          else fileStats(spark.read.schema(df.schema)
+            .option("basePath", dbPath).parquet(fresh.toIndexedSeq: _*))
+        if (stats.nonEmpty) writeStats(stats, manifestDir, "append")
+        attest(m ++ stats)
+    }
   }
 
   // ---------------------------------------------------------------- //
@@ -227,18 +244,11 @@ class Database(val spark: SparkSession, val calcDir: String,
     * present ⇒ every data file is covered by manifest rows, because
     * every mutation deletes it BEFORE data lands and re-writes it only
     * AFTER the manifest caught up, all under the single-writer lock.
-    * With the marker, point lookups and the metadata-served reads skip
-    * the per-call full file listing that otherwise finds crash-window
-    * unmanifested files; without it (a crash window, or a pre-marker
-    * manifest) they fall back to the listing — pruning degrades, never
-    * correctness. */
+    * With the marker, point lookups and the metadata-served reads are
+    * served from manifest rows without listing the data files; without
+    * it (a crash window, or a pre-marker manifest) they fall back to
+    * plain scans — pruning degrades, never correctness. */
   private val commitMarker: String = s"$dbPath/_graft_skip_commit"
-
-  /** Columns every post-round-12 manifest carries; an older manifest
-    * lacking them is fully rebuilt on the next maintenance pass. */
-  private val manifestCols = Seq("file", "rows", "pid_hmin", "pid_hmax",
-    "psh_hmin", "psh_hmax", "pset_seq_max", "run_seq_min", "run_seq_max",
-    "time_utc_max")
 
   private def normalizePath(p: String): String =
     p.replaceFirst("^file:/+", "/")
@@ -249,26 +259,60 @@ class Database(val spark: SparkSession, val calcDir: String,
   def manifestFresh: Boolean =
     { recover(); Fs.exists(manifestDir) && Fs.exists(commitMarker) }
 
-  private def fileStats(src: DataFrame): DataFrame = {
-    def opt(name: String, c: Column, t: DataType): Column =
+  /** The last attested manifest: the marker content it was read or
+    * written under, and its rows. */
+  @volatile private var snapshot: Option[(String, Seq[FileStat])] = None
+
+  /** The manifest rows when the commit marker attests they cover every
+    * data file, else None — what every manifest consumer reads. Read at
+    * most once per marker state: the marker holds its commit instant,
+    * so a later commit by any handle never matches the snapshot, and
+    * this handle's appends and rebuilds carry it forward. The marker is
+    * only written over a manifest with every [[FileStat]] column. */
+  private[core] def manifest(): Option[Seq[FileStat]] = {
+    if (!manifestFresh) return None
+    val marker =
+      try Fs.readString(commitMarker) catch { case _: Exception => return None }
+    snapshot.collect { case (`marker`, m) => m }.orElse {
+      val m = spark.read.schema(FileStat.enc.schema).parquet(manifestDir)
+        .as(FileStat.enc).collect().toSeq
+        .map(s => s.copy(file = normalizePath(s.file)))
+      snapshot = Some(marker -> m)
+      Some(m)
+    }
+  }
+
+  /** Per-file stats of `src`: one pass, no shuffle — each partition
+    * folds its rows per file and the driver merges the partials. */
+  private def fileStats(src: DataFrame): Seq[FileStat] = {
+    def opt(name: String, c: Column, t: DataType = LongType): Column =
       if (src.columns.contains(name)) c else lit(null).cast(t)
-    def optLong(name: String, c: Column): Column = opt(name, c, LongType)
-    src.select(
+    val h = xxhash64(col("_pset_id"))
+    val ph = opt("_pset_hash", xxhash64(col("_pset_hash")))
+    val rs = opt("_run_seq", col("_run_seq").cast(LongType))
+    FileStat.byFile(src.select(
         regexp_replace(input_file_name(), "^file:/+", "/").as("file"),
-        xxhash64(col("_pset_id")).as("__h"),
-        optLong("_pset_hash", xxhash64(col("_pset_hash"))).as("__ph"),
-        optLong("_pset_seq", col("_pset_seq").cast(LongType)).as("__ps"),
-        optLong("_run_seq", col("_run_seq").cast(LongType)).as("__rs"),
-        opt("_time_utc", col("_time_utc").cast(TimestampType),
-          TimestampType).as("__t"))
-      .groupBy(col("file"))
-      .agg(count(lit(1)).as("rows"),
-        min(col("__h")).as("pid_hmin"), max(col("__h")).as("pid_hmax"),
-        min(col("__ph")).as("psh_hmin"), max(col("__ph")).as("psh_hmax"),
-        max(col("__ps")).as("pset_seq_max"),
-        min(col("__rs")).as("run_seq_min"),
-        max(col("__rs")).as("run_seq_max"),
-        max(col("__t")).as("time_utc_max"))
+        lit(1L).as("rows"), h.as("pid_hmin"), h.as("pid_hmax"),
+        ph.as("psh_hmin"), ph.as("psh_hmax"),
+        opt("_pset_seq", col("_pset_seq").cast(LongType)).as("pset_seq_max"),
+        rs.as("run_seq_min"), rs.as("run_seq_max"),
+        opt("_time_utc", col("_time_utc").cast(TimestampType), TimestampType)
+          .as("time_utc_max"))
+      .as(FileStat.enc).mapPartitions(FileStat.byFile)(FileStat.enc)
+      .collect().iterator).toSeq
+  }
+
+  private def writeStats(stats: Seq[FileStat], dir: String,
+                         mode: String): Unit =
+    spark.createDataset(stats)(FileStat.enc).coalesce(1)
+      .write.mode(mode).parquet(dir)
+
+  /** Attest manifest rows `m` with a fresh marker and keep them as this
+    * handle's snapshot. */
+  private def attest(m: Seq[FileStat]): Unit = {
+    val marker = s"committed=${java.time.Instant.now()}"
+    Fs.writeString(commitMarker, marker)
+    snapshot = Some(marker -> m)
   }
 
   /** Full manifest rebuild: one column-pruned scan of the db. */
@@ -281,65 +325,32 @@ class Database(val spark: SparkSession, val calcDir: String,
     Fs.delete(commitMarker)
     val tmp = s"$dbPath/_graft_skip_tmp"
     Fs.delete(tmp)
-    fileStats(read()).coalesce(1).write.mode("overwrite").parquet(tmp)
+    val stats = fileStats(read())
+    writeStats(stats, tmp, "overwrite")
     Fs.delete(manifestDir)
     Fs.rename(tmp, manifestDir)
-    Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
+    attest(stats)
   }
 
-  /** Incremental maintenance: stat only files absent from the
-    * manifest (an append's new partition). No-op while the manifest
-    * does not exist — the layout machinery is opt-in. A pre-marker
-    * manifest (missing the seq/hash-range columns) is fully rebuilt
-    * once instead of appended to with a mismatched schema. */
-  private def updateSkipManifestUnlocked(): Unit = {
-    if (!Fs.exists(manifestDir)) return
-    Fs.delete(commitMarker)
-    val m = spark.read.parquet(manifestDir)
-    if (!manifestCols.forall(m.columns.contains)) {
-      rebuildSkipManifestUnlocked(); return
-    }
-    val known = m.select(col("file"))
-      .collect().map(r => normalizePath(r.getString(0))).toSet
-    val fresh = read().inputFiles.map(normalizePath).filterNot(known)
-    if (fresh.nonEmpty) {
-      val src = spark.read.option("basePath", dbPath)
-        .option("mergeSchema", "true").parquet(fresh.toIndexedSeq: _*)
-      fileStats(src).coalesce(1).write.mode("append").parquet(manifestDir)
-    }
-    Fs.writeString(commitMarker, s"committed=${java.time.Instant.now()}")
+  /** Manifest hash range of each hash-ranged column. */
+  private val hashRange: Map[String, FileStat => Option[(Long, Long)]] = Map(
+    "_pset_id" -> (s => s.pid_hmin.zip(s.pid_hmax)),
+    "_pset_hash" -> (s => s.psh_hmin.zip(s.psh_hmax)))
+
+  /** `files` as one frame: with a fixed `schema` when the caller reads
+    * known columns, else with their merged schema. */
+  private def readFiles(files: Seq[String],
+                        schema: Option[StructType] = None): DataFrame = {
+    val r = spark.read.option("basePath", dbPath)
+    schema.fold(r.option("mergeSchema", "true"))(r.schema)
+      .parquet(files.toIndexedSeq: _*)
   }
 
-  /** Data files whose manifest hash range over (`loCol`, `hiCol`)
-    * covers at least one probe value — served PURELY from manifest
-    * rows, so only meaningful when [[manifestFresh]] attests there are
-    * no unmanifested files; None otherwise (callers fall back to a
-    * scan with listing). */
-  private def prunedFiles(loCol: String, hiCol: String,
-                          probes: Seq[String]): Option[Seq[String]] = {
-    if (!manifestFresh) return None
-    val m = spark.read.parquet(manifestDir)
-    if (!m.columns.contains(loCol)) return None
-    val rows = m.select(col("file"), col(loCol), col(hiCol)).collect()
-    val hs = hashProbes(probes)
-    Some(rows.filter { r =>
-      !r.isNullAt(1) && {
-        val lo = r.getLong(1); val hi = r.getLong(2)
-        hs.exists(h => lo <= h && h <= hi)
-      }
-    }.map(r => normalizePath(r.getString(0))).toSeq)
-  }
-
-  /** xxhash64 of each probe under Spark's own implementation (the one
-    * the manifest ranges were built with). */
-  private def hashProbes(vs: Seq[String]): Array[Long] =
-    spark.createDataset(vs.distinct)(
-        org.apache.spark.sql.Encoders.STRING)
-      .select(xxhash64(col("value"))).collect().map(_.getLong(0))
-
-  private def readFiles(files: Seq[String]): DataFrame =
-    spark.read.option("basePath", dbPath)
-      .option("mergeSchema", "true").parquet(files.toIndexedSeq: _*)
+  /** [[readFiles]] filtered by `probe`; an empty file list is the empty
+    * frame with the database's schema. */
+  private def readPruned(files: Seq[String], probe: Column): DataFrame =
+    if (files.isEmpty) read().filter(probe).limit(0)
+    else readFiles(files).filter(probe)
 
   /** Opt-in clustered rewrite of the whole db into ~`numFiles` files,
     * plus a fresh skip manifest. Default clustering key is
@@ -373,58 +384,43 @@ class Database(val spark: SparkSession, val calcDir: String,
       .repartitionByRange(numFiles, col("_run_id"), col("__graft_ck"))
       .sortWithinPartitions(col("_run_id"), col("__graft_ck"))
       .drop("__graft_ck")
-    withWriteLock {
-      val tmp = s"$dbPath.__layout_tmp"
-      Fs.delete(tmp)
-      clustered.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
-      rebuildSkipManifestUnlocked()
-    }
+    rewrite(clustered, "layout", manifest = true)
+  }
+
+  /** Replace the database with `df`: written aside, then swapped in
+    * ([[swapIn]]). The rewrite produces fresh files, so a kept skip
+    * manifest (or any, with `manifest`) is rebuilt over them. */
+  private def rewrite(df: DataFrame, tag: String,
+                      manifest: Boolean = false): Unit = withWriteLock {
+    val keep = manifest || Fs.exists(manifestDir)
+    val tmp = s"$dbPath.__${tag}_tmp"
+    Fs.delete(tmp)
+    df.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
+    swapIn(tmp)
+    if (keep) rebuildSkipManifestUnlocked()
   }
 
   /** Point lookup by `_pset_id`, served through the skip manifest when
-    * present: keep files whose hash range covers the probe, PLUS any
-    * file the manifest does not know (a crash window between a data
-    * append and its manifest rows must degrade pruning, never
-    * correctness), re-apply the exact predicate. Falls back to a full
-    * filter scan with no manifest — pruning is an optimization, never
-    * a filter. */
+    * the commit marker attests it: keep files whose hash range covers
+    * the probe, re-apply the exact predicate. Falls back to a full
+    * filter scan without an attested manifest (none kept, or a crash
+    * window between a data append and its manifest rows) — pruning is
+    * an optimization, never a filter. */
   def lookup(psetId: String): DataFrame = lookupAll(Seq(psetId))
 
   /** Batch form of [[lookup]]: rows for ANY of `psetIds`, pruned to
-    * the union of each probe's manifest-matching files (plus
-    * unmanifested files, same crash-window rule). With a clustered
-    * layout, m probes read ~m files of a million-file table instead
-    * of scanning it m times — the shape of a training-run's "fetch
-    * these specific psets" follow-up at 100 TB. */
+    * the union of each probe's manifest-matching files. With a
+    * clustered layout, m probes read ~m files of a million-file table
+    * instead of scanning it m times — the shape of a training-run's
+    * "fetch these specific psets" follow-up at 100 TB. */
   def lookupAll(psetIds: Seq[String]): DataFrame = {
     recover()
     require(psetIds.nonEmpty, "need at least one _pset_id")
     val probe = col("_pset_id").isin(psetIds: _*)
-    if (!Fs.exists(manifestDir)) return read().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-      .select(col("file"), col("pid_hmin"), col("pid_hmax")).collect()
-    val hs = hashProbes(psetIds)
-    val kept = m.filter { r =>
-      !r.isNullAt(1) && {
-        val lo = r.getLong(1); val hi = r.getLong(2)
-        hs.exists(h => lo <= h && h <= hi)
-      }
-    }.map(r => r.getString(0))
-    // commit marker present: the manifest covers every data file, so
-    // the lookup is served purely from manifest rows — no per-call
-    // full file listing. Absent (a crash window between an append and
-    // its manifest rows, or a pre-marker manifest): enumerate and
-    // include unmanifested files — pruning degrades, never correctness.
-    val unknown =
-      if (Fs.exists(commitMarker)) Array.empty[String]
-      else {
-        val known = m.map(r => normalizePath(r.getString(0))).toSet
-        read().inputFiles.map(normalizePath).filterNot(known)
-      }
-    val files = (kept.map(normalizePath) ++ unknown).distinct
-    if (files.isEmpty) read().filter(probe).limit(0)
-    else readFiles(files.toIndexedSeq).filter(probe)
+    val hs = Database.sortedHashes(psetIds)
+    manifest().fold(read().filter(probe))(m => readPruned(
+      m.filter(s => Database.covers(hs, hashRange("_pset_id")(s)))
+        .map(_.file), probe))
   }
 
   /** Time travel: the database as of run `runSeq` — every row with
@@ -448,16 +444,10 @@ class Database(val spark: SparkSession, val calcDir: String,
   def asOf(runSeq: Long): DataFrame = {
     recover()
     val probe = col("_run_seq") <= runSeq
-    if (!manifestFresh) return read().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-    if (!m.columns.contains("run_seq_min")) return read().filter(probe)
-    val files = m.select(col("file"), col("run_seq_min")).collect()
+    manifest().fold(read().filter(probe))(m => readPruned(
       // a null per-file min cannot attest the file is all-future —
       // keep it (pruning degrades, the re-applied predicate corrects)
-      .filter(r => r.isNullAt(1) || r.getLong(1) <= runSeq)
-      .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) read().filter(probe).limit(0)
-    else readFiles(files).filter(probe)
+      m.filter(_.run_seq_min.forall(_ <= runSeq)).map(_.file), probe))
   }
 
   /** Time travel by WALL CLOCK: the database as of instant `ts` —
@@ -478,29 +468,16 @@ class Database(val spark: SparkSession, val calcDir: String,
     * not an empty frame). */
   def asOfTime(ts: java.time.Instant): DataFrame = {
     recover()
-    val commits: Seq[(Long, java.sql.Timestamp)] = {
-      val m =
-        if (!manifestFresh) None
-        else {
-          val mf = spark.read.parquet(manifestDir)
-          if (!Seq("run_seq_max", "time_utc_max")
-              .forall(mf.columns.contains)) None
-          else Some(mf.select(col("run_seq_max"), col("time_utc_max"))
+    val commits: Seq[(Long, java.sql.Timestamp)] = manifest() match {
+      case Some(m) => m.flatMap(s => s.run_seq_max.zip(s.time_utc_max))
+      case None => readOpt() match {
+        case Some(df) if df.columns.contains("_time_utc") =>
+          df.groupBy(col("_run_seq").cast(LongType).as("__r"))
+            .agg(max(col("_time_utc").cast(TimestampType)).as("__t"))
             .collect()
             .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-            .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq)
-        }
-      m.getOrElse {
-        readOpt() match {
-          case None => Seq.empty
-          case Some(df) =>
-            if (!df.columns.contains("_time_utc")) Seq.empty
-            else df.groupBy(col("_run_seq").cast(LongType).as("__r"))
-              .agg(max(col("_time_utc").cast(TimestampType)).as("__t"))
-              .collect()
-              .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-              .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq
-        }
+            .map(r => (r.getLong(0), r.getTimestamp(1))).toSeq
+        case _ => Seq.empty
       }
     }
     // per-run commit time = max over that run's files/rows
@@ -535,26 +512,12 @@ class Database(val spark: SparkSession, val calcDir: String,
     require(afterRun <= untilRun,
       s"empty change interval: afterRun=$afterRun > untilRun=$untilRun")
     val probe = col("_run_seq") > afterRun && col("_run_seq") <= untilRun
-    if (!manifestFresh) return read().filter(probe)
-    val m = spark.read.parquet(manifestDir)
-    // both range bounds must exist (an older or externally-built
-    // manifest carrying only the min must degrade to the filter scan,
-    // not throw — mirrors the counters() schema guard)
-    if (!Seq("run_seq_min", "run_seq_max").forall(m.columns.contains))
-      return read().filter(probe)
-    val files = m.select(col("file"), col("run_seq_min"), col("run_seq_max"))
-      .collect()
-      .filter { r =>
-        // keep a file iff [min, max] OVERLAPS (afterRun, untilRun]:
-        // its latest row is past afterRun AND its earliest row is
-        // within untilRun (a null bound cannot attest non-overlap)
-        val maxAfter = r.isNullAt(2) || r.getLong(2) > afterRun
-        val minUntil = r.isNullAt(1) || r.getLong(1) <= untilRun
-        maxAfter && minUntil
-      }
-      .map(r => normalizePath(r.getString(0))).toIndexedSeq
-    if (files.isEmpty) read().filter(probe).limit(0)
-    else readFiles(files).filter(probe)
+    manifest().fold(read().filter(probe))(m => readPruned(
+      // keep a file iff [min, max] OVERLAPS (afterRun, untilRun]: its
+      // latest row is past afterRun AND its earliest row is within
+      // untilRun (a null bound cannot attest non-overlap)
+      m.filter(s => s.run_seq_max.forall(_ > afterRun) &&
+        s.run_seq_min.forall(_ <= untilRun)).map(_.file), probe))
   }
 
   /** Manifest-served variants of the point extractors (the static
@@ -579,16 +542,8 @@ class Database(val spark: SparkSession, val calcDir: String,
     extraPsetCols.foreach { case (c, t) =>
       if (!df.columns.contains(c)) df = df.withColumn(c, lit(null).cast(t))
     }
-    val rehashed = df.withColumn("_pset_hash", PsetHash.expr(df.columns.toSeq))
-    withWriteLock {
-      val hadManifest = Fs.exists(manifestDir)
-      val tmp = s"$dbPath.__rewrite_tmp"
-      Fs.delete(tmp)
-      rehashed.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
-      // the rewrite produced fresh files; a kept manifest must follow
-      if (hadManifest) rebuildSkipManifestUnlocked()
-    }
+    rewrite(df.withColumn("_pset_hash", PsetHash.expr(df.columns.toSeq)),
+      "rewrite")
   }
 
   /** Backup the whole calc dir to `calc.bak_<stamp>_run_id_<id>` before a
@@ -739,15 +694,7 @@ class Database(val spark: SparkSession, val calcDir: String,
     if (!exists) return
     val runs = read().select("_run_id").distinct().count().toInt
     val n = if (numPartitions > 0) numPartitions else math.max(1, runs)
-    val df = read().repartition(n, col("_run_id"))
-    withWriteLock {
-      val hadManifest = Fs.exists(manifestDir)
-      val tmp = s"$dbPath.__compact_tmp"
-      Fs.delete(tmp)
-      df.write.mode("overwrite").partitionBy("_run_id").parquet(tmp)
-      swapIn(tmp)
-      if (hadManifest) rebuildSkipManifestUnlocked()
-    }
+    rewrite(read().repartition(n, col("_run_id")), "compact")
   }
 
   /** Read a JSON-format database back (the S3 alternate format,
@@ -769,17 +716,54 @@ object Database {
             basename: String = "database"): Database =
     new Database(spark, calcDir, basename)
 
-  /** Which of `values` already exist in `df`'s column `colName` — one
-    * column-pruned pass, broadcast small side (the J1 dedup shape). */
-  def existingAmong(df: DataFrame, colName: String,
-                    values: Seq[String]): Set[String] = {
-    if (!df.columns.contains(colName)) return Set.empty
-    import df.sparkSession.implicits._
-    val small = values.distinct.toDF(colName)
-    df.select(colName)
-      .join(broadcast(small), Seq(colName), "left_semi")
-      .distinct().collect().map(_.getString(0)).toSet
+  /** `(max _pset_seq, max _run_seq)` of `df`, -1 where there is none —
+    * one column-pruned aggregate. */
+  def seqMaxima(df: DataFrame): (Long, Long) = {
+    val r = df.agg(max(col("_pset_seq")).cast(LongType),
+      max(col("_run_seq")).cast(LongType)).head()
+    (if (r.isNullAt(0)) -1L else r.getLong(0),
+     if (r.isNullAt(1)) -1L else r.getLong(1))
   }
+
+  /** Which probe values already exist in `df`, per probed column: ONE
+    * filter scan testing set membership per column. The sets ship in
+    * the predicates' closures — no broadcast hash relation (a memory
+    * page each), no literal list for the optimizer to walk. A column
+    * `df` lacks matches nothing. */
+  def existingAmong(df: DataFrame, probes: Map[String, Seq[String]])
+      : Map[String, Set[String]] = {
+    val sets = probes.map { case (c, vs) => c -> vs.toSet }
+    val cols = sets.keys.toSeq
+      .filter(c => sets(c).nonEmpty && df.columns.contains(c))
+    val hits =
+      if (cols.isEmpty) Array.empty[Row]
+      else df.select(cols.map(col): _*).filter(cols.map { c =>
+        val in = sets(c); udf((v: String) => in.contains(v)).apply(col(c))
+      }.reduce(_ || _)).collect()
+    sets.map { case (c, in) =>
+      val i = cols.indexOf(c)
+      c -> (if (i < 0) Set.empty[String]
+        else hits.map(_.getString(i)).filter(in).toSet)
+    }
+  }
+
+  /** Spark's `xxhash64` of one string (seed 42, the SQL function's),
+    * computed on the driver — bit-equal to the hash the manifest
+    * ranges were built with. */
+  private[core] def probeHash(s: String): Long =
+    XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L)
+
+  private[core] def sortedHashes(vs: Seq[String]): Array[Long] =
+    vs.distinct.map(probeHash).toArray.sorted
+
+  /** Does sorted `hs` hold a value inside `range`? */
+  private[core] def covers(hs: Array[Long],
+                           range: Option[(Long, Long)]): Boolean =
+    range.exists { case (lo, hi) =>
+      val i = java.util.Arrays.binarySearch(hs, lo)
+      val at = if (i >= 0) i else -i - 1
+      at < hs.length && hs(at) <= hi
+    }
 
   /** Fuse boolean filter columns with and/or/xor and apply
     * (ref psweep.py:622-679 `df_filter_conds`). */
@@ -880,5 +864,41 @@ object Database {
       }
       proj.sparkSession.createDataFrame(rdd, schema)
     }
+  }
+}
+
+/** One skip-manifest row: a data file's row count, the `xxhash64`
+  * ranges of its `_pset_id` and `_pset_hash`, its seq bounds and latest
+  * `_time_utc`; a bound is None where the file holds no value for it.
+  * Field names are the manifest's column names. */
+private[core] final case class FileStat(
+    file: String, rows: Long,
+    pid_hmin: Option[Long], pid_hmax: Option[Long],
+    psh_hmin: Option[Long], psh_hmax: Option[Long],
+    pset_seq_max: Option[Long],
+    run_seq_min: Option[Long], run_seq_max: Option[Long],
+    time_utc_max: Option[java.sql.Timestamp]) {
+
+  /** The stats of both row sets of the same file together. */
+  def merge(o: FileStat): FileStat = {
+    def lo(a: Option[Long], b: Option[Long]) = (a ++ b).minOption
+    def hi(a: Option[Long], b: Option[Long]) = (a ++ b).maxOption
+    FileStat(file, rows + o.rows,
+      lo(pid_hmin, o.pid_hmin), hi(pid_hmax, o.pid_hmax),
+      lo(psh_hmin, o.psh_hmin), hi(psh_hmax, o.psh_hmax),
+      hi(pset_seq_max, o.pset_seq_max),
+      lo(run_seq_min, o.run_seq_min), hi(run_seq_max, o.run_seq_max),
+      (time_utc_max ++ o.time_utc_max).maxByOption(_.toInstant))
+  }
+}
+
+private[core] object FileStat {
+  val enc: Encoder[FileStat] = Encoders.product[FileStat]
+
+  /** Partial stats merged per file. */
+  def byFile(it: Iterator[FileStat]): Iterator[FileStat] = {
+    val m = scala.collection.mutable.LinkedHashMap.empty[String, FileStat]
+    it.foreach(s => m.updateWith(s.file)(o => Some(o.fold(s)(_.merge(s)))))
+    m.valuesIterator
   }
 }

@@ -13,7 +13,11 @@ import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
   */
 object Fs {
 
-  def fs(path: String, conf: Configuration = new Configuration()): FileSystem =
+  /** Shared and never mutated: building one parses Hadoop's default
+    * resources, which costs ~100x the metadata call it would serve. */
+  private lazy val sharedConf = new Configuration()
+
+  def fs(path: String, conf: Configuration = sharedConf): FileSystem =
     new Path(path).getFileSystem(conf)
 
   def exists(path: String): Boolean = fs(path).exists(new Path(path))
@@ -28,12 +32,11 @@ object Fs {
 
   /** Recursive copy (backup / simulate-sandbox primitive). */
   def copyDir(src: String, dst: String): Unit = {
-    val conf = new Configuration()
-    val sfs = fs(src, conf); val dfs = fs(dst, conf)
+    val sfs = fs(src); val dfs = fs(dst)
     require(sfs.exists(new Path(src)), s"copy source missing: $src")
     require(!dfs.exists(new Path(dst)), s"copy dest already exists: $dst")
     FileUtil.copy(sfs, new Path(src), dfs, new Path(dst),
-      false, false, conf)
+      false, false, sharedConf)
     ()
   }
 

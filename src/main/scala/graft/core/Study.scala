@@ -52,8 +52,9 @@ private[core] final case class TaskCtx(
   *     normalized through the inferred union schema *before hashing*
   *     (ref psweep.py:1380-1392 — types must equal what the database holds
   *     or hashes diverge);
-  *   - dedup/incremental-resume is a hash semi-join against the database
-  *     (broadcast of the small incoming hash set);
+  *   - dedup/incremental-resume and the `_pset_id` collision check are
+  *     one filter scan of the database (membership in the incoming
+  *     hash and id sets);
   *   - execution is one `mapPartitions` pass over the rows — Spark's
   *     executor pool replaces both `multiprocessing.Pool` and the dask
   *     cluster (ref psweep.py:1465-1476);
@@ -72,7 +73,10 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
   private def effCalcDir: String =
     if (cfg.simulate) cfg.calcDir + ".simulate" else cfg.calcDir
 
-  def database: Database = Database(spark, effCalcDir, cfg.databaseBasename)
+  /** One handle per study, so a run reuses the manifest snapshot the
+    * previous run's append carried forward. */
+  lazy val database: Database =
+    Database(spark, effCalcDir, cfg.databaseBasename)
 
   /** The repeat-failed pattern as first-class API (ref manual.md:891-944,
     * examples/repeat_failed.py): extract the psets of failed rows and
@@ -147,30 +151,10 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
     // 3.1-4/5: load-or-create + counter recovery (from the in-memory base
     // when one is given, else from disk).
     var base: Option[DataFrame] = baseDf.orElse(db.readOpt())
-    val (maxPsetSeq, maxRunSeq) = baseDf match {
-      case Some(bdf) =>
-        import org.apache.spark.sql.functions.{col, max}
-        val r = bdf.agg(max(col("_pset_seq")).cast(LongType),
-          max(col("_run_seq")).cast(LongType)).head()
-        (if (r.isNullAt(0)) -1L else r.getLong(0),
-         if (r.isNullAt(1)) -1L else r.getLong(1))
-      case None if db.manifestFresh =>
-        // disk-backed with a fresh manifest: counters from the
-        // per-file maxima (SURVEY §4.3(c)'s lightweight metadata
-        // read — zero data files)
-        db.counters()
-      case None => base match {
-        // no manifest: aggregate over the ALREADY-BUILT base frame
-        // (a db.counters() fallback would re-list and re-read the db)
-        case None => (-1L, -1L)
-        case Some(bdf) =>
-          import org.apache.spark.sql.functions.{col, max}
-          val r = bdf.agg(max(col("_pset_seq")).cast(LongType),
-            max(col("_run_seq")).cast(LongType)).head()
-          (if (r.isNullAt(0)) -1L else r.getLong(0),
-           if (r.isNullAt(1)) -1L else r.getLong(1))
-      }
-    }
+    // disk-backed: the manifest's per-file maxima when attested (zero
+    // data files), else one aggregate over the ALREADY-BUILT base frame
+    val (maxPsetSeq, maxRunSeq) =
+      baseDf.fold(db.counters(base))(Database.seqMaxima)
 
     // 3.1-6: backup before mutating (ref psweep.py:1417-1427).
     if (cfg.backup) db.backup()
@@ -207,39 +191,32 @@ final class Study(val spark: SparkSession, val cfg: StudyConfig) {
       }
     }
 
-    // 3.1-8b: skip_dups — drop incoming psets whose hash already exists
-    // (ref psweep.py:1432-1439).
-    val dupHashes: Set[String] =
-      if (!cfg.skipDups) Set.empty
-      // disk-backed with a fresh manifest: hash ranges prune the
-      // pre-check to touched files; otherwise the already-built base
-      // frame serves the scan (no per-call re-listing)
-      else if (baseDf.isEmpty && db.manifestFresh)
-        db.existingAmong("_pset_hash", hashes)
-      else
-        base.map(Database.existingAmong(_, "_pset_hash", hashes))
-          .getOrElse(Set.empty)
+    // 3.1-8b/9: skip_dups and identity assignment — drop incoming psets
+    // whose hash already exists (ref psweep.py:1432-1439); fresh run id,
+    // collision-checked pset ids (ref psweep.py:1441-1450). One filter
+    // scan answers both probes; disk-backed, a fresh manifest prunes it
+    // to the files whose hash ranges cover a probe, otherwise the
+    // already-built base frame serves it (no per-call re-listing).
+    def existing(probes: Map[String, Seq[String]]): Map[String, Set[String]] =
+      if (baseDf.isEmpty) db.existingAmong(probes, base)
+      else Database.existingAmong(base.get, probes)
+    val candidateIds = norm.map(_ => UUID.randomUUID().toString)
+    val found = existing(Map("_pset_id" -> candidateIds) ++
+      (if (cfg.skipDups) Map("_pset_hash" -> hashes) else Map.empty))
+    val dupHashes = found.getOrElse("_pset_hash", Set.empty)
     val keptIdx = norm.indices.filter(i => !dupHashes.contains(hashes(i)))
     if (keptIdx.isEmpty)
       return RunOutput(base.getOrElse(ValueSchema.toDF(spark, Seq.empty)),
         "none", 0L)
 
-    // 3.1-9: identity assignment — fresh run id; collision-checked pset ids
-    // (ref psweep.py:1441-1450).
     val runId = UUID.randomUUID().toString
     if (cfg.git) Git.noteRun(runId)
-    var psetIds = keptIdx.map(_ => UUID.randomUUID().toString)
-    def collisions(ids: Seq[String]): Set[String] =
-      if (baseDf.isEmpty && db.manifestFresh)
-        db.existingAmong("_pset_id", ids)
-      else
-        base.map(Database.existingAmong(_, "_pset_id", ids))
-          .getOrElse(Set.empty)
-    var colliding = collisions(psetIds)
+    var psetIds = keptIdx.map(candidateIds)
+    var colliding = found("_pset_id")
     while (colliding.nonEmpty) {
       psetIds = psetIds.map(id =>
         if (colliding.contains(id)) UUID.randomUUID().toString else id)
-      colliding = collisions(psetIds)
+      colliding = existing(Map("_pset_id" -> psetIds))("_pset_id")
     }
     val runSeq = maxRunSeq + 1
     val work: Seq[Map[String, Any]] = keptIdx.zipWithIndex.map {

@@ -180,6 +180,90 @@ class DatabaseSpec extends AnyFunSuite {
     assert(db.existingAmong("no_such_col", Seq("v")) == Set.empty)
   }
 
+  test("incremental manifest equals a rebuild: a bulk run, a rebuild and " +
+    "three extension appends keep the same per-file rows a fresh " +
+    "rebuildSkipManifest writes; the carried snapshot equals a re-read, " +
+    "and another handle's commit invalidates it") {
+    val calc = tmpDir("graft-dbequiv-")
+    val study = Study(spark, StudyConfig(calcDir = calc, skipDups = true))
+    val grid = (a: Range) => Grid.pgrid(Grid.plist("a", a),
+      Grid.plist("b", Seq("x", "y")))
+    study.run(p => Map("r_" -> 1.0), grid(0 until 50))
+    val db = study.database
+    db.rebuildSkipManifest()
+    Seq(40 until 60, 55 until 70, 0 until 80).foreach(a =>
+      study.run(p => Map("r_" -> 2.0), grid(a)))
+    def persisted(): Map[String, FileStat] =
+      spark.read.parquet(s"${db.dbPath}/_graft_skip").as(FileStat.enc)
+        .collect().map(s => s.file -> s).toMap
+    val incremental = persisted()
+    assert(incremental.size == db.read().inputFiles.length)
+    assert(incremental.values.map(_.rows).sum == 160L)
+    // the snapshot the appends carried equals what a new handle reads
+    assert(db.manifest().map(_.toSet) ==
+      Database(spark, calc).manifest().map(_.toSet))
+    assert(db.manifest().map(_.toSet) == Some(incremental.values.toSet))
+    Database(spark, calc).rebuildSkipManifest()
+    val rebuilt = persisted()
+    assert(rebuilt.keySet == incremental.keySet)
+    rebuilt.foreach { case (f, s) =>
+      assert(incremental(f) == s, s"manifest row of $f differs") }
+    // another handle's append commits a new marker: this handle re-reads
+    Study(spark, StudyConfig(calcDir = calc))
+      .run(p => Map("r_" -> 3.0), grid(100 until 101))
+    assert(db.counters() == Database.seqMaxima(db.read()))
+    assert(db.manifest().map(_.map(_.rows).sum) == Some(162L))
+  }
+
+  test("a pre-marker manifest missing the newer columns is never served: " +
+    "reads fall back to scans and the next append rebuilds it") {
+    val calc = tmpDir("graft-dbold-")
+    val study = Study(spark, calc)
+    study.run(p => Map("r_" -> 1.0), Grid.plist("a", 0 until 20))
+    val db = Database(spark, calc)
+    db.rebuildSkipManifest()
+    // rewrite the manifest as an old version kept it: file and _pset_id
+    // ranges only, no commit marker
+    val skip = s"${db.dbPath}/_graft_skip"
+    val old = spark.read.parquet(skip)
+      .select("file", "rows", "pid_hmin", "pid_hmax").collect()
+    Fs.delete(skip)
+    Fs.delete(s"${db.dbPath}/_graft_skip_commit")
+    spark.createDataFrame(java.util.Arrays.asList(old: _*),
+      new org.apache.spark.sql.types.StructType().add("file", "string")
+        .add("rows", "long").add("pid_hmin", "long").add("pid_hmax", "long"))
+      .write.parquet(skip)
+    assert(db.hasSkipManifest && !db.manifestFresh)
+    assert(db.manifest().isEmpty)
+    assert(db.counters() == (19L, 0L))
+    assert(db.asOf(0L).count() == 20L && db.changes(0L).count() == 0L)
+    val id = db.read().select("_pset_id").head().getString(0)
+    assert(db.lookupAll(Seq(id)).count() == 1L)
+    // the next run appends; with no attested manifest to extend, the
+    // manifest is rebuilt with every column and attested again
+    Study(spark, StudyConfig(calcDir = calc, skipDups = true))
+      .run(p => Map("r_" -> 2.0), Grid.plist("a", 15 until 25))
+    assert(db.manifestFresh)
+    assert(spark.read.parquet(skip).columns.toSet ==
+      FileStat.enc.schema.fieldNames.toSet)
+    assert(db.counters() == (24L, 1L))
+    assert(db.manifest().map(_.map(_.rows).sum) == Some(25L))
+  }
+
+  test("driver-side probe hash equals Spark's xxhash64 column bit for bit") {
+    import spark.implicits._
+    val psetHashes = Seq(Map[String, Any]("a" -> 1L),
+      Map[String, Any]("a" -> 2.5, "b" -> "x"), Map[String, Any]("c" -> null))
+      .map(PsetHash.hash(_))
+    assert(psetHashes.forall(_.matches("[0-9a-f]{40}")))
+    val probes = Seq("", "a", "p0-1234", "plain ascii text 0123456789",
+      "é", "Grüße", "日本語テキスト", "emoji 🙂 and 𝄞", "mixed é 日 🙂 z") ++
+      psetHashes
+    val spark64 = probes.toDF("v").select(col("v"), xxhash64(col("v")))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    probes.foreach(v => assert(Database.probeHash(v) == spark64(v), v))
+  }
+
   test("asOf: time travel over the run log — history is exact, future " +
     "partitions' files are never read with a fresh manifest, and the " +
     "crash window falls back to the filter scan") {

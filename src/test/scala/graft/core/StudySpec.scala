@@ -217,6 +217,56 @@ class StudySpec extends AnyFunSuite {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def countJobs[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"$group-end" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      // listeners see events in post order: once the sentinel job,
+      // started after `body` returned, is seen, every job of `body` is
+      // counted
+      sc.setJobGroup(s"$group-end", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("skipDups extension against a fresh manifest runs in at most 8 " +
+    "Spark jobs — no per-call schema inference, no manifest re-read, no " +
+    "broadcast probe") {
+    val calc = tmpDir("graft-jobpin-")
+    val cfg = StudyConfig(calcDir = calc, skipDups = true)
+    val grid = (a: Range) => Grid.pgrid(Grid.plist("a", a),
+      Grid.plist("b", Seq(0.5, 1.5)))
+    Study(spark, cfg).run(f1, grid(0 until 40))
+    Study(spark, cfg).database.rebuildSkipManifest()
+    // a fresh handle: the manifest is read once, nothing is carried
+    val study = Study(spark, cfg)
+    val (out, fresh) = countJobs(study.run(f1, grid(30 until 50)))
+    assert(out.executed == 20L)
+    assert(fresh <= 8, s"extension run took $fresh Spark jobs")
+    // the same handle again: the append carried the manifest forward
+    val (out2, carried) = countJobs(study.run(f1, grid(45 until 60)))
+    assert(out2.executed == 20L && out2.db.count() == 120L)
+    assert(carried < fresh, s"$carried jobs with the snapshot carried, " +
+      s"$fresh without")
+  }
+
   test("params must not carry bookkeeping columns") {
     val calc = tmpDir("graft-bad-")
     intercept[IllegalArgumentException] {
