@@ -13,56 +13,12 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q_join_stars")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2.
-    *
-    * Every `q_stream_*` closure runs under
-    * [[graft.streaming.Monitor.withDrainPartitions]]: these queries
-    * drain a BOUNDED file stream through a fresh checkpoint per
-    * invocation, and a stateful drain materializes one state-store
-    * instance per shuffle partition per micro-batch — so the partition
-    * count is derived from the drained input's size (capped at the
-    * session's configured shuffle partitions; see drainPartitions'
-    * scaladoc for the production-sizing argument) instead of paying a
-    * cluster-sized constant for kilobytes of state. Only the eager
-    * drain inside the closure is affected; the returned frame executes
-    * under the session's normal configuration. */
-  /** The table each q_stream query actually drains, for
-    * [[graft.streaming.Monitor.drainPartitions]] sizing (ADVICE r15:
-    * sizing from the whole sf dir counted every table, not the one
-    * being streamed). Zero behavioral change at the bench SFs — every
-    * table there is under one 32 MB sizing unit, so the derived count
-    * is the floor either way — but at scale the derivation must follow
-    * the real input. Queries that stream a scratch REWRITE of a table
-    * (q_stream_neardedup, q_stream_simdedup_index write the documents
-    * split to a temp dir first) size from that table — same bytes,
-    * honest proxy. q_stream_run_tail drains a history db built inside
-    * its own closure, so it re-derives from the db path itself
-    * (nested [[graft.streaming.Monitor.withDrainPartitions]] — the
-    * inner, input-accurate count wins for the drain). */
-  private val streamedTable: Map[String, String] = {
-    val events = Seq("q_stream_sessionize", "q_stream_sessionize_native",
-      "q_stream_windowed", "q_stream_windowed_quantiles",
-      "q_stream_windowed_quantiles_append", "q_stream_attribution",
-      "q_stream_attribution_hourly").map(_ -> "events.parquet")
-    val embeddings = Seq("q_stream_semantic").map(_ -> "embeddings.parquet")
-    (events ++ embeddings).toMap // every other q_stream drains documents
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val all = graft.queries.Relational.queries ++
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    graft.queries.Relational.queries ++
       graft.queries.Core.queries ++
       graft.queries.TrainingData.queries ++
       graft.queries.Tokenizer.queries
-    all.map {
-      case (name, fn) if name.startsWith("q_stream") =>
-        val table = streamedTable.getOrElse(name, "documents.parquet")
-        name -> ((s: SparkSession, dir: String) =>
-          graft.streaming.Monitor.withDrainPartitions(s, s"$dir/$table") {
-            fn(s, dir)
-          })
-      case other => other
-    }
-  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

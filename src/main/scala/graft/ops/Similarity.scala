@@ -623,45 +623,15 @@ object Similarity {
   def dequantize(q: Column, scale: Column): Column =
     transform(q, x => x.cast("double") * scale)
 
-  /** Plain-L2 deterministic mini k-means for PQ sub-codebooks: seeds
-    * from the `k` lowest-id rows, assignment by minimum L2 (via the
-    * monotone `dot - ||c||^2/2` form), per-dimension means — every
-    * centroid element 1e-6 floor-rounded, but NOT normalized: product
+  /** ALL `m` PQ sub-codebooks trained in ONE plain-L2 Lloyd loop (r16,
+    * guide §1.2 — fewer driver actions). Per subspace: seeds from the
+    * `k` lowest-id rows, assignment by minimum L2 (via the monotone
+    * `dot - ||c||^2/2` form), per-dimension means, every centroid
+    * element 1e-6 floor-rounded but NOT normalized: product
     * quantization reconstructs subvector magnitudes, so, unlike the
-    * spherical [[kmeansCentroids]], codewords keep theirs. */
-  private[ops] def kmeansCentroidsL2(corpus: DataFrame, k: Int, iters: Int,
-                                     idCol: String, vecCol: String)
-      : Array[Array[Double]] = {
-    def round(c: Array[Double]) = c.map(x => math.floor(x * 1e6) / 1e6)
-    var cents = corpus.orderBy(col(idCol)).limit(k)
-      .select(col(vecCol)).collect()
-      .map(r => round(rowVec(r, 0)))
-    (0 until iters).foreach { _ =>
-      val dims = corpus
-        .select(assignCentroidL2(col(vecCol), cents).as("cid"),
-          posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x").cast("double")).as("m"))
-        .collect()
-      val byCid = dims.groupBy(_.getInt(0))
-      cents = cents.indices.map { i =>
-        byCid.get(i) match {
-          case Some(rows) =>
-            val dim = rows.map(_.getInt(1)).max + 1
-            val c = new Array[Double](dim)
-            rows.foreach(r => c(r.getInt(1)) = r.getDouble(2))
-            round(c)
-          case None => cents(i) // empty cluster keeps its codeword
-        }
-      }.toArray
-    }
-    cents
-  }
-
-  /** ALL `m` PQ sub-codebooks trained in ONE Lloyd loop (r16, guide
-    * §1.2 — fewer driver actions): the per-subspace
-    * [[kmeansCentroidsL2]] runs were independent loops over the SAME
-    * train sample, costing `m × (1 seed collect + iters aggregate
+    * spherical [[kmeansCentroids]], codewords keep theirs. The
+    * per-subspace runs this replaced were independent loops over the
+    * SAME train sample, costing `m × (1 seed collect + iters aggregate
     * jobs)` of sequential scheduler round trips; every subspace's
     * assignment and per-dimension mean now computes in one pass per
     * iteration (`m` structs exploded per row, grouped by (sub, cid,
@@ -746,8 +716,9 @@ object Similarity {
     * bandwidth cut is the entire point at corpus scale); the LUT rides
     * the broadcast query rows so nothing concentrates on the driver —
     * no maxQueries bound, the [[ivfTopKBatch]] discipline. Codebook
-    * training is `m` runs of [[kmeansCentroidsL2]] on the derived hash
-    * sample (never `iters` full-corpus scans).
+    * training is one [[kmeansCentroidsL2Multi]] loop over all `m`
+    * subspaces of the derived hash sample (never `iters` full-corpus
+    * scans).
     *
     * Engine-portable: codewords are 1e-6 floor-rounded, assignment and
     * LUT dots are fixed-order folds, the ADC sum is `m-1` adds in
@@ -930,8 +901,8 @@ object Similarity {
 
   /** Build a persisted PQ index at `path`: `path/books` holds the
     * frozen per-subspace codebooks (`(s, cid, vals)` rows — tiny),
-    * `path/codes` the `m`-int code per vector. Train cost is
-    * [[kmeansCentroidsL2]] per subspace on the derived hash sample;
+    * `path/codes` the `m`-int code per vector. Train cost is one
+    * [[kmeansCentroidsL2Multi]] loop on the derived hash sample;
     * encode is one corpus pass. The index is the thing ANN serving
     * scans — `m` small ints per vector against `4*dim` float bytes. */
   def buildPqIndex(corpus: DataFrame, path: String, m: Int = 4,

@@ -35,10 +35,6 @@ object Core {
   private val historyDbs =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Unique memory-sink names for repeated streaming runs within one
-    * session (the Relational.streamQueryId convention). */
-  private val tailQueryId = new java.util.concurrent.atomic.AtomicLong(0L)
-
   private def historyDb(s: SparkSession): Database = {
     val calc = historyDbs.getOrElseUpdate("db", {
       val c = freshDir()
@@ -210,21 +206,12 @@ object Core {
     // drain-append-drain contract is pinned in MonitorSpec
     "q_stream_run_tail" -> ((s, _) => {
       val db = historyDb(s)
-      val name = s"graft_run_tail_${tailQueryId.incrementAndGet()}"
-      // re-derive the drain's state partitions from the ACTUAL drained
-      // input — the history db built here — instead of the sf dir the
-      // generic SparkEntry wrapper sized from (ADVICE r15: this query
-      // ignores `dir` entirely); the inner wrapper wins for the drain
+      // this query ignores `dir`: its drain is sized from the history db
       graft.streaming.Monitor.withDrainPartitions(s, db.dbPath) {
-        val q = graft.streaming.Monitor.tailDatabase(db)
-          .select(col("a"), col("result_"), col("_run_seq"))
-          .writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.table(name).orderBy(col("a"))
+        graft.streaming.Monitor.drainToMemory(
+          graft.streaming.Monitor.tailDatabase(db)
+            .select(col("a"), col("result_"), col("_run_seq")), "append")
+      }.orderBy(col("a"))
     }),
 
     // E6: log capture into the _logs column (F7)

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Tokenize
+import graft.streaming.Monitor.drainToMemory
+import Streamed.streamOf
 
 /** Tokenizer-training queries: the distributed BPE merge loop
   * ([[Tokenize.trainBpeDistributed]] — the histogram never leaves the
@@ -130,29 +132,18 @@ object Tokenizer {
       row.getAs[Long]("t").toDouble / row.getAs[Long]("c")
     })
 
-  /** Unique memory-sink names for repeated streaming runs in-process. */
-  private val streamQueryId = new java.util.concurrent.atomic.AtomicLong(0L)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Score-at-ingest with the trained tokenizer: the merge table rides
     // the STREAM's plan as the same literal replace chain — a stateless
     // projection, no state store, append mode, constant memory (the
     // offline-train / online-count split of a production token-budget
     // meter). The oracle is the batch encode replay — identical output.
-    "q_stream_bpe_encode" -> ((s, dir) => {
+    "q_stream_bpe_encode" -> streamOf("documents")((s, dir, open) => {
       val m = merges(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .select(col("doc_id").cast("long").as("doc_id"),
           Tokenize.bpeCountExpr(col("text"), m).as("n_tok"))
-      val name = s"graft_stream_bpe_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).select(col("doc_id"), col("n_tok"))
+      drainToMemory(stream, "append").select(col("doc_id"), col("n_tok"))
         .orderBy(col("doc_id"))
     }),
 
@@ -162,25 +153,17 @@ object Tokenizer {
     // split: per-doc (nc, no) flows to the sink, per-source rates
     // aggregate over the drained output. Oracle = the batch coverage
     // replay, identical output.
-    "q_stream_tok_coverage" -> ((s, dir) => {
+    "q_stream_tok_coverage" -> streamOf("documents")((s, dir, open) => {
       val a = alphabet(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
       val pre = array_join(regexp_extract_all(col("text"),
         lit(graft.ops.Text.bpeTokenPattern), lit(0)), "")
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .select(col("source"),
           when(col("doc_id") % 7 === 0, concat(col("text"), lit(covProbe)))
             .otherwise(col("text")).as("text"))
         .select(col("source"), length(pre).cast("long").as("nc"),
           size(Tokenize.oovChars(pre, a)).cast("long").as("no"))
-      val name = s"graft_stream_cov_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).groupBy(col("source"))
+      drainToMemory(stream, "append").groupBy(col("source"))
         .agg(sum(col("nc")).as("n_chars"), sum(col("no")).as("n_oov"),
           (sum(col("no")).cast("double") / sum(col("nc")))
             .as("oov_rate"))
@@ -219,24 +202,16 @@ object Tokenizer {
     // ingest stream (append mode, no state store), per-source rates
     // aggregate over the drained sink — the streaming twin, sharing
     // the batch replay like the coverage pair.
-    "q_stream_tok_drift" -> ((s, dir) => {
+    "q_stream_tok_drift" -> streamOf("documents")((s, dir, open) => {
       val m = merges(s, dir)
       val ref = refTpc(s, dir)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .select(col("source"),
           Tokenize.bpeCountExpr(col("text"), m).as("nt"),
           length(array_join(regexp_extract_all(col("text"),
             lit(graft.ops.Text.bpeTokenPattern), lit(0)), ""))
             .cast("long").as("nc"))
-      val name = s"graft_stream_tpc_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).groupBy(col("source"))
+      drainToMemory(stream, "append").groupBy(col("source"))
         .agg(sum(col("nc")).as("n_chars"), sum(col("nt")).as("n_tok"),
           (sum(col("nt")).cast("double") / sum(col("nc"))).as("tpc"))
         .withColumn("ref_tpc", lit(ref))
@@ -297,7 +272,7 @@ object Tokenizer {
     // char/OOV/token counts) ride the stream as one stateless Project;
     // the per-source aggregate and the action CASE evaluate over the
     // drained sink. Same replay as the batch gate.
-    "q_stream_tok_retrain" -> ((s, dir) => {
+    "q_stream_tok_retrain" -> streamOf("documents")((s, dir, open) => {
       val a = alphabet(s, dir)
       val m = merges(s, dir)
       val ref = refTpc(s, dir)
@@ -311,25 +286,18 @@ object Tokenizer {
       def pre(t: org.apache.spark.sql.Column) = array_join(
         regexp_extract_all(t, lit(graft.ops.Text.bpeTokenPattern),
           lit(0)), "")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .select(col("source"),
           length(pre(covText)).cast("long").as("cc"),
           size(Tokenize.oovChars(pre(covText), a)).cast("long")
             .as("co"),
           Tokenize.bpeCountExpr(driftText, m).as("nt"),
           length(pre(driftText)).cast("long").as("nc"))
-      val name = s"graft_stream_gate_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val drained = drainToMemory(stream, "append")
       val oovRate = sum(col("co")).cast("double") / sum(col("cc"))
       val drift = (sum(col("nt")).cast("double") / sum(col("nc"))) /
         lit(ref)
-      s.table(name).groupBy(col("source"))
+      drained.groupBy(col("source"))
         .agg(oovRate.as("oov_rate"), drift.as("drift"),
           when(oovRate > covThreshold, "retrain_alphabet")
             .when(abs(drift - 1.0d) > driftThreshold,

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.{Classifier, Dedup, Dsir, Freq, Multimodal, Profile, Quantile, Retrieval, Similarity, Sketch, Text}
 import graft.core.Pin.PinOps
+import graft.streaming.Monitor.drainToMemory
+import Streamed.streamOf
 
 /** The training-data pipeline operators (dedup / similarity / multimodal /
   * text analysis) exposed as driver-verifiable queries over the documents
@@ -105,10 +107,6 @@ object TrainingData {
       Classifier.trainSoftmaxSparse(feats, "idx", "label", dim,
         numClasses = 3, iters = 30, lr = 0.5,
         init = Some(distilledDomainInit(s, dir, feats, words, dim))))
-
-  /** Unique memory-sink names for repeated streaming runs within one
-    * session (the Relational.streamQueryId convention). */
-  private val streamQueryId = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Id columns normalize to LONG on read — the events ns->us lesson
     * (TESTDATA.md "events schema contract") applied to the id space: a
@@ -530,7 +528,7 @@ object TrainingData {
     // state store, the multiclass twin of q_stream_classifier; gate
     // and output restricted to uniquely-argmaxed docs as in the batch
     // query, one shared argmax-rule oracle
-    "q_stream_domain_classifier" -> ((s, dir) => {
+    "q_stream_domain_classifier" -> streamOf("documents")((s, dir, open) => {
       val words = Seq("hash", "join", "sort")
       def f(c: Column) = Classifier.vocabCountFeatures(Text.tokens(c),
         words)
@@ -542,9 +540,7 @@ object TrainingData {
       val model = softmaxModels.getOrElseUpdate(dir,
         Classifier.trainSoftmax(feats, "f", "label", dim = words.size,
           numClasses = 3))
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .withColumn("f", f(col("text")))
         .filter((c0 > c1 && c0 > c2) || (c1 > c0 && c1 > c2) ||
           (c2 > c0 && c2 > c1))
@@ -552,13 +548,7 @@ object TrainingData {
           Classifier.softmaxPredictExpr(col("f"), model).as("predicted"),
           when(c0 >= c1 && c0 >= c2, 0).when(c1 >= c2, 1).otherwise(2)
             .as("label"))
-      val name = s"graft_stream_domclf_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val drained = s.table(name)
+      val drained = drainToMemory(stream, "append")
       val acc = drained.select(avg(when(col("predicted") === col("label"),
         1.0).otherwise(0.0))).head().getDouble(0)
       require(acc == 1.0,
@@ -575,7 +565,8 @@ object TrainingData {
     // batch/2^18 path). Offline half trains via the shared
     // distill-and-polish helper; gate and oracle are the argmax rule
     // on uniquely-argmaxed docs, shared with the batch router
-    "q_stream_domain_classifier_sparse" -> ((s, dir) => {
+    "q_stream_domain_classifier_sparse" ->
+        streamOf("documents")((s, dir, open) => {
       val words = Seq("hash", "join", "sort")
       val dim = 4096
       def f(c: Column) = Classifier.vocabCountFeatures(Text.tokens(c),
@@ -591,9 +582,7 @@ object TrainingData {
           dim))
         .withColumn("label", label)
       val model = sparseDomainModel(s, dir, featsB, words, dim)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .withColumn("f", f(col("text")))
         .withColumn("idx", Classifier.hashedIndices(kept(col("text")),
           dim))
@@ -603,13 +592,7 @@ object TrainingData {
           Classifier.softmaxPredictSparseExpr(col("idx"), model)
             .as("predicted"),
           label.as("label"))
-      val name = s"graft_stream_domsparse_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val drained = s.table(name)
+      val drained = drainToMemory(stream, "append")
       val acc = drained.select(avg(when(col("predicted") === col("label"),
         1.0).otherwise(0.0))).head().getDouble(0)
       require(acc == 1.0,
@@ -629,7 +612,8 @@ object TrainingData {
     // (exactly-once via the ledger). The final model must classify
     // every uniquely-argmaxed doc to the rule (fail-loud), so the
     // oracle is the shared engine-independent argmax rule
-    "q_stream_domain_router_online" -> ((s, dir) => {
+    "q_stream_domain_router_online" ->
+        streamOf("documents")((s, dir, open) => {
       val words = Seq("hash", "join", "sort")
       val dim = 4096
       def f(c: Column) = Classifier.vocabCountFeatures(Text.tokens(c),
@@ -650,9 +634,8 @@ object TrainingData {
       val seed = distilledDomainInit(s, dir, featsB, words, dim)
       val tmp = scratchDir("graft-domonline-")
       Classifier.saveSoftmax(seed, s"$tmp/model")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      def stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val schema = open.batch.schema
+      def stream = open(schema)
         .withColumn("f", f(col("text")))
         .select(col("doc_id").cast("long").as("doc_id"),
           Classifier.hashedIndices(kept(col("text")), dim).as("idx"),
@@ -916,7 +899,7 @@ object TrainingData {
     // offline-train / online-score split of a production quality
     // filter). Same fail-loud convergence gate on the offline half,
     // same engine-independent oracle rule
-    "q_stream_classifier" -> ((s, dir) => {
+    "q_stream_classifier" -> streamOf("documents")((s, dir, open) => {
       val vocab = Seq("hash", "join", "sort", "scan",
         "batch", "data", "merge", "filter")
       val featsB = docs(s, dir).select(col("doc_id"),
@@ -928,21 +911,13 @@ object TrainingData {
       val acc = Classifier.trainAccuracy(featsB, "f", "label", model)
       require(acc == 1.0,
         s"classifier under-converged on the oracle concept: acc=$acc")
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open()
         .select(col("doc_id").cast("long").as("doc_id"),
           Classifier.vocabCountFeatures(Text.tokens(col("text")), vocab)
             .as("f"))
         .select(col("doc_id"),
           (Classifier.marginExpr(col("f"), model) > 0).as("predicted"))
-      val name = s"graft_stream_clf_${streamQueryId.incrementAndGet()}"
-      val q = stream.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).select(col("doc_id"), col("predicted"))
+      drainToMemory(stream, "append").select(col("doc_id"), col("predicted"))
         .orderBy(col("doc_id"))
     }),
 
@@ -953,7 +928,7 @@ object TrainingData {
     // final model must classify the whole corpus to the concept
     // (fail-loud), so the oracle stays the engine-independent rule.
     // Predictions go through the sparse broadcast-join scorer
-    "q_stream_classifier_online" -> ((s, dir) => {
+    "q_stream_classifier_online" -> streamOf("documents")((s, dir, open) => {
       val vocab = Seq("hash", "join", "sort", "scan",
         "batch", "data", "merge", "filter")
       val dim = 64
@@ -964,9 +939,8 @@ object TrainingData {
         Classifier.hashedIndices(kept(txt), dim).as("idx"),
         (size(filter(Text.tokens(txt), t => t === "hash")) >= 2)
           .as("label"))
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      def stream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val schema = open.batch.schema
+      def stream = open(schema)
         .select(labeled(col("doc_id"), col("text")): _*)
       val tmp = scratchDir("graft-clfonline-")
       // online NEWTON folds: ~6 warm-started IRLS steps per batch reach
@@ -1383,10 +1357,8 @@ object TrainingData {
     // through the bm25IndexSink (one postings+stats append per
     // micro-batch), then search over the drained index — equal to the
     // batch scorer over everything that arrived, one shared oracle
-    "q_stream_bm25" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    "q_stream_bm25" -> streamOf("documents")((s, _, open) => {
+      val docsStream = open()
       val tmp = scratchDir("graft-bm25stream-")
       val q = graft.streaming.Monitor.bm25IndexSink(docsStream,
         s"$tmp/idx", s"$tmp/ckpt")
@@ -1513,23 +1485,13 @@ object TrainingData {
     // complete-mode aggregation over continuous ingestion (one row of
     // counters in state), drained under AvailableNow == the batch
     // attribution — one shared oracle
-    "q_stream_gate_funnel" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val name =
-        s"graft_stream_gate_${streamQueryId.incrementAndGet()}"
-      val q = graft.streaming.Monitor.gateMonitor(docsStream, Seq(
+    "q_stream_gate_funnel" -> streamOf("documents")((_, _, open) => {
+      drainToMemory(graft.streaming.Monitor.gateMonitor(open(), Seq(
         "nonempty" -> col("text").isNotNull,
         "min_tokens" -> (Text.tokenCount(col("text")) >= 10),
         "mean_tok_len" -> (Text.meanTokenLen(col("text")) <= lit(12.0)),
-        "quality" -> (Text.qualityScore(col("text")) >= lit(0.5))))
-        .writeStream
-        .outputMode("complete").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("rule_idx"))
+        "quality" -> (Text.qualityScore(col("text")) >= lit(0.5)))),
+        "complete").orderBy(col("rule_idx"))
     }),
 
     // KMV/theta sketch audience-overlap matrix: per-event-type distinct
@@ -1595,16 +1557,14 @@ object TrainingData {
     // drained table serves the SAME overlap matrix — one shared oracle
     // with the batch query; the cross-batch bit-identity is pinned by
     // SketchSpec/MonitorSpec
-    "q_stream_sketch_audience" -> ((s, dir) => {
-      val batchEv = s.read.parquet(s"$dir/events.parquet")
+    "q_stream_sketch_audience" -> streamOf("events")((s, _, open) => {
+      val batchEv = open.batch
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       // size k from the (batch view of the) data, like q_sketch_audience:
       // the sink must stay in the exact regime for the shared oracle
       val k = Sketch.exactRegimeK(batchEv, "event_type", col("user_id"),
         minK = 4096)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val evStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val evStream = open()
         .select(col("event_type"), col("user_id").cast("long").as("user_id"))
       val tmp = scratchDir("graft-sketchstream-")
       val q = graft.streaming.Monitor.sketchSink(evStream,
@@ -1652,14 +1612,12 @@ object TrainingData {
     // the KLL-sink contract), and the drained table serves the SAME
     // top-10 probe — one shared oracle with the batch query; the
     // exact-regime fold bit-identity is pinned by FreqSpec
-    "q_stream_heavyhitters" -> ((s, dir) => {
+    "q_stream_heavyhitters" -> streamOf("documents")((s, dir, open) => {
       val batchToks = docs(s, dir).select(col("source"),
         explode(Text.tokens(col("text"))).as("tok"))
       val k = Freq.exactRegimeK(batchToks, "source", col("tok"),
         minK = 1024)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docStream = open()
         .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
       val tmp = scratchDir("graft-mgstream-")
       val q = graft.streaming.Monitor.freqSketchSink(docStream,
@@ -1700,15 +1658,13 @@ object TrainingData {
     // span-dedup contract), and the drained table serves the SAME
     // quantile probe — one shared oracle with the batch query; the
     // exact-regime fold bit-identity is pinned by QuantileSpec
-    "q_stream_quantiles" -> ((s, dir) => {
-      val batchEv = s.read.parquet(s"$dir/events.parquet")
+    "q_stream_quantiles" -> streamOf("events")((s, _, open) => {
+      val batchEv = open.batch
         .select(col("event_type"), col("value").cast("double").as("value"))
         .filter(col("event_type").isNotNull)
       val k = Quantile.exactRegimeK(batchEv, "event_type", col("value"),
         minK = 4096)
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val evStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+      val evStream = open()
         .select(col("event_type"), col("value").cast("double").as("value"))
         .filter(col("event_type").isNotNull)
       val tmp = scratchDir("graft-kllstream-")
@@ -1750,7 +1706,7 @@ object TrainingData {
     // the ledger), and the drained state renders the SAME audit — one
     // shared oracle with q_table_profile; the fold's exact-regime
     // bit-identity to the one-shot state is pinned by SketchSpec
-    "q_stream_table_profile" -> ((s, dir) => {
+    "q_stream_table_profile" -> streamOf("documents")((s, dir, open) => {
       val d = docs(s, dir).select(
         col("doc_id"), col("lang"), col("source"),
         col("n_chars").cast("long").as("n_chars"),
@@ -1760,9 +1716,7 @@ object TrainingData {
       // the folded state must stay in the exact regime for the shared
       // oracle; the probe rides the stats cache
       val (kD, kQ) = Sketch.profileK(d, cols)
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val docStream = open()
         .select(col("doc_id"), col("lang"), col("source"),
           col("n_chars").cast("long").as("n_chars"),
           Text.tokenCount(col("text")).cast("long").as("n_toks"))
@@ -2011,7 +1965,7 @@ object TrainingData {
     // PERSISTED index — survivors accumulate in the sink's output, so
     // the drained outPath equals the batch incremental replay and the
     // oracle is shared verbatim
-    "q_stream_neardedup" -> ((s, dir) => {
+    "q_stream_neardedup" -> streamOf("documents")((s, dir, _) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val b1 = d.filter(col("doc_id") % 2 === 0)
       val dups = b1.filter(col("doc_id") % 6 === 0)
@@ -2059,7 +2013,7 @@ object TrainingData {
     // whitespace-doubled re-crawls of batch 2 must drop against the
     // PERSISTED signature index; survivors accumulate in the sink's
     // output, equal to the batch incremental replay (shared oracle)
-    "q_stream_simdedup_index" -> ((s, dir) => {
+    "q_stream_simdedup_index" -> streamOf("documents")((s, dir, _) => {
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val b1 = d.filter(col("doc_id") % 2 === 0)
       val dups = b1.filter(col("doc_id") % 6 === 0)
@@ -2173,17 +2127,15 @@ object TrainingData {
     // folds through the persisted reservoir sink; the drained reservoir
     // must equal the batch sample, so all three priority queries share
     // one oracle
-    "q_stream_priority" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    "q_stream_priority" -> streamOf("documents")((s, _, open) => {
+      val docsStream = open()
       val tmp = scratchDir("graft-priostream-")
       val q = graft.streaming.Monitor.prioritySampleSink(docsStream,
         s"$tmp/reservoir", s"$tmp/ckpt", col("doc_id"),
         graft.ops.Text.tokenCount(col("text")).cast("double"), n = 50)
       try q.processAllAvailable() finally q.stop()
       graft.ops.Sampling.incrementalPrioritySample(
-        s.read.parquet(s"$dir/documents.parquet").limit(0),
+        open.batch.limit(0),
         s"$tmp/reservoir", col("doc_id"),
         graft.ops.Text.tokenCount(col("text")).cast("double"), n = 50)
         .select(col("key").cast("long").as("doc_id"), col("est_weight"))
@@ -2196,10 +2148,8 @@ object TrainingData {
     // one batch, whose in-batch marking equals the batch operator
     // exactly — so this shares q_doc_span_dedup's oracle; the genuine
     // cross-batch fold is pinned by MonitorSpec's two-drop test
-    "q_stream_span" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    "q_stream_span" -> streamOf("documents")((s, _, open) => {
+      val docsStream = open()
       val tmp = scratchDir("graft-spanstream-")
       val q = graft.streaming.Monitor.spanDedupSink(docsStream,
         s"$tmp/idx", s"$tmp/out", s"$tmp/ckpt", k = 8)
@@ -2214,14 +2164,13 @@ object TrainingData {
     // the survivors — the corpus-scale-reference regime where
     // q_stream_contamination's plan-literal shingle set can't go.
     // Output: per-source clean counts (shared < 3), exact
-    "q_stream_contamination_bloom" -> ((s, dir) => {
-      val d = s.read.parquet(s"$dir/documents.parquet")
+    "q_stream_contamination_bloom" -> streamOf("documents")((s, _, open) => {
+      val d = open.batch
       val (bloomBytes, refSh) = graft.ops.Contamination.buildReferenceBloom(
         d.filter(col("doc_id") < 40), n = 3, expectedItems = 500000L)
       // pin the shingle table so batches re-verify, not re-derive
       val pinned = refSh.pinned()
-      val stream = s.readStream.schema(d.schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
+      val stream = open(d.schema)
         .filter(col("doc_id") >= 40)
       val tmp = scratchDir("graft-bloomstream-")
       val q = graft.streaming.Monitor.bloomDecontaminationSink(stream,
@@ -2329,10 +2278,8 @@ object TrainingData {
     // index sink. One AvailableNow drain = one batch = the in-batch
     // canonical closure, replayed exactly (LSH candidates included) by
     // the oracle; the cross-batch fold is pinned by MonitorSpec
-    "q_stream_semantic" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-      val vecsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    "q_stream_semantic" -> streamOf("embeddings")((s, _, open) => {
+      val vecsStream = open()
         .select(col("vec_id"), col("embedding"))
       val tmp = scratchDir("graft-semstream-")
       val q = graft.streaming.Monitor.semanticDedupSink(vecsStream,
@@ -3146,8 +3093,8 @@ object TrainingData {
     * `dot - ||c||^2/2`, ties to HIGHER cid; per-dimension means 1e-6
     * floored, no normalization — codewords keep magnitudes), then the
     * full-corpus encode `p{s}b(vec_id, c{s})` and the per-query LUT
-    * `l{s}(query_id, cid, d)` — mirroring Similarity.kmeansCentroidsL2 /
-    * pqTopK exactly. */
+    * `l{s}(query_id, cid, d)` — mirroring Similarity.kmeansCentroidsL2Multi
+    * / pqTopK exactly. */
   private def pqSubspaceCtes(s: Int, cw: Int): String = {
     val lo = s * 16
     def scoreExpr(tbl: String): String =

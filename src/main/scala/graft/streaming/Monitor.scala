@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured-Streaming surfaces of the engine.
@@ -78,6 +78,19 @@ object Monitor {
     val prev = spark.conf.get(key)
     spark.conf.set(key, drainPartitions(spark, inputPaths: _*).toString)
     try body finally spark.conf.set(key, prev)
+  }
+
+  private val memoryDrainId = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Drain a bounded stream to exhaustion (`AvailableNow`) into a fresh
+    * in-memory table and return that table. Table names are unique per
+    * process, so repeated drains in one session never collide. */
+  def drainToMemory(stream: Dataset[_], outputMode: String): DataFrame = {
+    val name = s"graft_drain_${memoryDrainId.incrementAndGet()}"
+    stream.writeStream.outputMode(outputMode).format("memory")
+      .queryName(name).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    stream.sparkSession.table(name)
   }
 
   /** Minimal schema every tmpsave checkpoint carries (user result columns

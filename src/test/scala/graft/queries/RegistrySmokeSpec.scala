@@ -19,6 +19,8 @@ import graft.SparkEntry
   * `count()` rather than plan-forcing: analysis errors surface either
   * way, but execution also catches runtime shape breaks (codegen,
   * corrupt-file, schema-on-read mismatches) at negligible sf0.001 cost.
+  * Entries with a golden digest in `output_digests.tsv` are checked for
+  * unchanged values too (see [[OutputDigest]]).
   */
 class RegistrySmokeSpec extends AnyFunSuite {
   import graft.SparkSpec.spark
@@ -31,9 +33,22 @@ class RegistrySmokeSpec extends AnyFunSuite {
   private val mayBeEmpty: Set[String] = Set(
     "q_dedup_exact", "q_join_anti", "q_except_years")
 
+  // Golden digests (OutputDigest): an entry listed there is collected
+  // instead of counted, and its rows must hash to the committed digest.
+  private val digests = OutputDigest.committed
+
   for (name <- SparkEntry.queries.keys.toSeq.sorted)
     test(s"smoke: $name") {
-      val n = SparkEntry.queries(name)(spark, sf).count()
+      val df = SparkEntry.queries(name)(spark, sf)
+      val n = digests.get(name) match {
+        case Some((wantRows, wantDigest)) =>
+          val rows = df.collect()
+          assert(rows.length == wantRows, s"$name row count changed")
+          assert(OutputDigest.of(df.schema, rows) == wantDigest,
+            s"$name output differs from its golden digest")
+          rows.length.toLong
+        case None => df.count()
+      }
       if (!mayBeEmpty(name)) assert(n > 0, s"$name returned 0 rows at sf0.001")
     }
 }

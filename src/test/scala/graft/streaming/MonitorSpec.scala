@@ -994,4 +994,122 @@ class MonitorSpec extends AnyFunSuite {
     val m2 = Classifier.loadSoftmax(modelPath).get
     assert(!m2.weights(0).sameElements(m1.weights(0)))
   }
+
+  // --- drain sizing: drainPartitions / withDrainPartitions ---
+
+  private val unit = 32L << 20
+
+  /** Runs `body` with the given session confs set (None = unset),
+    * restoring each previous value after. */
+  private def withConfs[T](kv: (String, Option[String])*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    def set(k: String, v: Option[String]): Unit =
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    kv.foreach { case (k, v) => set(k, v) }
+    try body finally prev.foreach { case (k, v) => set(k, v) }
+  }
+
+  /** A dir holding sparse files of the given logical lengths: sized
+    * without writing (or occupying) the bytes. */
+  private def sparseDir(lengths: Long*): java.io.File = {
+    val d = new java.io.File(tmpDir("graft-drain-size-"))
+    lengths.zipWithIndex.foreach { case (n, i) =>
+      val f = new java.io.RandomAccessFile(new java.io.File(d, s"part-$i"), "rw")
+      try f.setLength(n) finally f.close()
+    }
+    d
+  }
+
+  private def deleteDir(d: java.io.File): Unit = {
+    d.listFiles().foreach(_.delete()); d.delete(): Unit
+  }
+
+  private val shuffleKey = "spark.sql.shuffle.partitions"
+  private val stateKey = "spark.graft.stream.statePartitions"
+
+  test("drainPartitions: one partition per started 32 MB of input, " +
+    "summed over every input path") {
+    val a = sparseDir(3 * unit)          // exactly 3 units
+    val b = sparseDir(unit + 1, unit)    // 2 units and one byte
+    try withConfs(shuffleKey -> Some("200"), stateKey -> None) {
+      assert(Monitor.drainPartitions(spark, a.getPath) == 3)
+      assert(Monitor.drainPartitions(spark, b.getPath) == 3)
+      assert(Monitor.drainPartitions(spark, a.getPath, b.getPath) == 6)
+      assert(Monitor.drainPartitions(spark, new java.io.File(a, "part-0")
+        .getPath) == 3)
+    } finally { deleteDir(a); deleteDir(b) }
+  }
+
+  test("drainPartitions: floor of 2 for small, empty and missing inputs") {
+    val small = sparseDir(1000L)
+    val empty = sparseDir()
+    try withConfs(shuffleKey -> Some("200"), stateKey -> None) {
+      assert(Monitor.drainPartitions(spark, small.getPath) == 2)
+      assert(Monitor.drainPartitions(spark, empty.getPath) == 2)
+      assert(Monitor.drainPartitions(spark,
+        s"${empty.getPath}/no-such-table.parquet") == 2)
+    } finally { deleteDir(small); deleteDir(empty) }
+  }
+
+  test("drainPartitions: capped at spark.sql.shuffle.partitions") {
+    val big = sparseDir(10 * unit)
+    try {
+      withConfs(shuffleKey -> Some("4"), stateKey -> None) {
+        assert(Monitor.drainPartitions(spark, big.getPath) == 4)
+      }
+      withConfs(shuffleKey -> Some("7"), stateKey -> None) {
+        assert(Monitor.drainPartitions(spark, big.getPath) == 7)
+      }
+      // the floor yields to a smaller cap
+      withConfs(shuffleKey -> Some("1"), stateKey -> None) {
+        assert(Monitor.drainPartitions(spark, big.getPath) == 1)
+      }
+    } finally deleteDir(big)
+  }
+
+  test("drainPartitions: an explicit spark.graft.stream.statePartitions " +
+    "wins outright, uncapped; 0 means derive") {
+    val big = sparseDir(10 * unit)
+    try {
+      withConfs(shuffleKey -> Some("4"), stateKey -> Some("9")) {
+        assert(Monitor.drainPartitions(spark, big.getPath) == 9)
+        assert(Monitor.drainPartitions(spark, s"${big.getPath}/none") == 9)
+      }
+      withConfs(shuffleKey -> Some("200"), stateKey -> Some("0")) {
+        assert(Monitor.drainPartitions(spark, big.getPath) == 10)
+      }
+    } finally deleteDir(big)
+  }
+
+  test("withDrainPartitions: the body sees the derived count; the " +
+    "previous value is restored after it, also when it throws") {
+    val in = sparseDir(5 * unit)
+    try withConfs(shuffleKey -> Some("200"), stateKey -> None) {
+      val seen = Monitor.withDrainPartitions(spark, in.getPath) {
+        spark.conf.get(shuffleKey)
+      }
+      assert(seen == "5")
+      assert(spark.conf.get(shuffleKey) == "200")
+      val e = intercept[IllegalStateException] {
+        Monitor.withDrainPartitions(spark, in.getPath) {
+          assert(spark.conf.get(shuffleKey) == "5")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(e.getMessage == "body failed")
+      assert(spark.conf.get(shuffleKey) == "200")
+    } finally deleteDir(in)
+  }
+
+  test("drainToMemory: each drain lands in its own table") {
+    import spark.implicits._
+    val in = tmpDir("graft-drain-mem-")
+    Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(in)
+    def stream = spark.readStream.schema("x long").parquet(in)
+    val a = Monitor.drainToMemory(stream, "append")
+    val b = Monitor.drainToMemory(stream.select((col("x") * 10).as("x")),
+      "append")
+    assert(a.as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(b.as[Long].collect().sorted.toSeq == Seq(10L, 20L, 30L))
+  }
 }
